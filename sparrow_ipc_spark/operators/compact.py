@@ -17,11 +17,12 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 
 from sparrow_ipc_spark.operators.decode_job import decode_blocks
 from sparrow_ipc_spark.operators.encode_job import (
     encode_transcripts,
+    load_dict_rows,
     payload_from_dict_rows,
 )
 from sparrow_ipc_spark.schema import TRANSCRIPTS_SCHEMA
@@ -70,7 +71,17 @@ def _compact_under_lease(spark, out_dir, small_rows, target_rows, schema,
     import json as _json
 
     from sparrow_ipc_spark.operators.encode_job import load_schema_sidecar
+    from sparrow_ipc_spark.sources import manifest as M
 
+    # committed lineage, read ONCE under the lease and BEFORE anything is
+    # staged or swapped: a broken manifest raises here while blocks/ and
+    # manifest/ are still intact (treating it as "no lineage" would
+    # silently collapse every snapshot into the rewrite's).  The same rows
+    # drive the guarded orphan vacuum, so a crashed append's unmanifested
+    # files are never folded into the rewrite.
+    committed = M.read_manifest_rows(out_dir)
+    M.vacuum_orphan_blocks(out_dir, committed)
+    lineage = {int(r["part_id"]): int(r["snapshot"]) for r in committed}
     if schema is None:
         schema = load_schema_sidecar(out_dir) or TRANSCRIPTS_SCHEMA
     job: dict = {}
@@ -92,7 +103,7 @@ def _compact_under_lease(spark, out_dir, small_rows, target_rows, schema,
     if n_small <= 1:
         return {"before": before, "after": before, "compacted": 0, "rows_moved": 0}
 
-    dict_rows = [r.asDict() for r in spark.read.parquet(f"{out_dir}/dictionaries").collect()]
+    dict_rows = load_dict_rows(out_dir)
     payload = payload_from_dict_rows(dict_rows)
     dec = decode_blocks(spark, small, dict_rows, schema=schema)
     rows_moved = dec.count()
@@ -128,40 +139,18 @@ def _compact_under_lease(spark, out_dir, small_rows, target_rows, schema,
     os.rename(f"{out_dir}/blocks", old)
     os.rename(tmp, f"{out_dir}/blocks")
     shutil.rmtree(old, ignore_errors=True)
-    return _finish_compact(spark, out_dir, before, n_small, rows_moved)
-
-
-def _finish_compact(spark: SparkSession, out_dir: str, before: int,
-                    n_small: int, rows_moved: int) -> dict:
-
-    # compaction is a REWRITE: compacted part files are gone, so time travel
-    # reaches back only to this new snapshot for the merged rows; untouched
-    # parts keep their original snapshot lineage.  The manifest is rebuilt
-    # as ONE merged segment — block compaction is inherently O(table), so
-    # a full manifest rewrite costs nothing extra here (the per-batch
-    # commit path stays O(batch) append-only).
-    from sparrow_ipc_spark.sources import manifest as M
-
-    try:
-        prev_man = {
-            int(r["part_id"]): int(r.get("snapshot", 0) or 0)
-            for r in M.read_manifest_rows(out_dir)
-        }
-    except Exception:
-        prev_man = {}
-    next_snap = (max(prev_man.values()) + 1) if prev_man else 0
-    bd = f"{out_dir}/blocks"
-    all_files = sorted(f for f in os.listdir(bd) if f.endswith(".parquet"))
-    man_rows = M.manifest_rows_for_new_files(spark, bd, all_files, next_snap)
-    for r in man_rows:
-        # untouched parts keep their original snapshot lineage; only the
-        # merged (rewritten) parts get the new snapshot
-        r["snapshot"] = prev_man.get(int(r["part_id"]), next_snap)
-    M.rewrite_manifest(out_dir, man_rows)
-    after = sum(int(r["n_blocks"]) for r in man_rows)
+    # compaction is a REWRITE: ONE segment over every block file replaces
+    # the manifest (block compaction is O(table) anyway).  Untouched parts
+    # keep their snapshot lineage; only the merged parts get the new
+    # snapshot, so time travel reaches them from there on.
+    next_snap = max(lineage.values(), default=-1) + 1
+    files = sorted(f for f in os.listdir(f"{out_dir}/blocks")
+                   if f.endswith(".parquet"))
+    man_rows = M.commit(out_dir, lease, files, next_snap,
+                        part_offset=part_offset, lineage=lineage)
     return {
         "before": before,
-        "after": after,
+        "after": sum(int(r["n_blocks"]) for r in man_rows),
         "compacted": int(n_small),
         "rows_moved": int(rows_moved),
     }

@@ -248,7 +248,9 @@ def decode_dir(
         blocks_df = (blocks_df.withColumn("_rn", F.row_number().over(w))
                      .where(F.col("_rn") == 1).drop("_rn"))
     blocks_df = prune_blocks(blocks_df, conv_id=conv_id, ts_range_us=ts_range_us)
-    dict_rows = [r.asDict() for r in spark.read.parquet(f"{out_dir}/dictionaries").collect()]
+    from sparrow_ipc_spark.operators.encode_job import load_dict_rows
+
+    dict_rows = load_dict_rows(out_dir)
     # an exact conv_id filter needs the conv_id COLUMN for row-level
     # re-evaluation (zone maps prune only at block granularity): decode it
     # internally when the caller's projection excludes it, then drop it

@@ -23,18 +23,35 @@ Layout of ``<table>/manifest/``:
 * ``_batch_<id>``     — streaming exactly-once markers (unchanged).
 
 Concurrency contract: ONE COMMITTER at a time, ENFORCED by
-:class:`CommitLease` (``manifest/_commit.lease``): every commit path —
-``write_encoded``, the DataSource batch writer, the foreachBatch
-``StreamingEncoder``, compaction — reads committed state and publishes
-its segment + cursor under the lease, so two live writers serialize
-instead of minting colliding part ids/snapshots.  A crashed holder's
-lease expires and is taken over (one-winner rename); a long job that
-loses its lease fails loudly at ``assert_owned`` before publishing,
-never after.  The lease is the plain-filesystem stand-in for a catalog
-CAS (Iceberg's commit arbiter) and the one place a real lock service
-plugs in.  Readers are always safe concurrently with the committer
-(segments appear atomically; a half-published batch is exposed at worst,
-never duplicated).
+:class:`CommitLease` (``manifest/_commit.lease``), and ONE commit path.
+Every writer — ``write_encoded``, the DataSource batch and stream
+writers, the foreachBatch ``StreamingEncoder``, compaction — holds the
+lease, takes its ``(snapshot, part_offset)`` from :func:`next_commit`,
+writes its dictionary rows and then its block files, and publishes
+through :func:`commit`, which runs, in order:
+
+1. drop block files a crashed attempt of the same deterministic commit
+   left beyond this attempt's set (``<tag>-*`` for ``seg-<tag>``);
+2. stamp manifest rows from the published block files
+   (:func:`manifest_rows_for_new_files`);
+3. ``lease.assert_owned()``;
+4. publish the segment (:func:`write_segment`, with the snapshot CAS;
+   compaction's ``lineage`` swaps the whole manifest instead);
+5. ``lease.assert_owned()`` again (a segment merge can run long);
+6. write the reconciled cursor (:func:`write_cursor`).
+
+An overwrite first empties the manifest (:func:`clear_manifest`, lease
+file kept) before it touches ``dictionaries/`` or ``blocks/``, then
+commits into the empty manifest like any other writer.
+
+Two live writers therefore serialize instead of minting colliding part
+ids/snapshots.  A crashed holder's lease expires and is taken over
+(one-winner rename); a long job that loses its lease fails loudly at
+``assert_owned`` before publishing, never after.  The lease is the
+plain-filesystem stand-in for a catalog CAS (Iceberg's commit arbiter)
+and the one place a real lock service plugs in.  Readers are always safe
+concurrently with the committer (segments appear atomically; a
+half-published batch is exposed at worst, never duplicated).
 
 Crash contract: a segment file appears atomically (tmp + ``os.replace``).
 Stream commits use DETERMINISTIC segment names (``seg-batch-<id>.parquet``)
@@ -59,6 +76,22 @@ SEGMENT_LIMIT = 64  # max seg files before an automatic merge
 
 def man_dir(path: str) -> str:
     return os.path.join(path, "manifest")
+
+
+def _read_json(p: str):
+    """Parsed JSON file, or None when it is missing or unparseable."""
+    try:
+        with open(p) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None
+
+
+def _lease_expired(payload: dict, lease_s: float) -> bool:
+    import time
+
+    return time.time() > float(payload.get("renewed", 0)) + float(
+        payload.get("lease_s", lease_s))
 
 
 def manifest_pa_schema():
@@ -89,10 +122,8 @@ def read_cursor(path: str) -> dict | None:
     would reuse snapshot and part ids).  The check is one directory
     listing of names — still O(1) file reads."""
     d = man_dir(path)
-    try:
-        with open(os.path.join(d, _CURSOR)) as f:
-            cur = json.load(f)
-    except (OSError, ValueError):
+    cur = _read_json(os.path.join(d, _CURSOR))
+    if not isinstance(cur, dict):
         return None
     if "snapshot" not in cur or "max_part_id" not in cur:
         return None
@@ -604,21 +635,90 @@ def write_segment(path: str, man_rows: list[dict], seg_name: str | None = None,
     return seg_name
 
 
-def rewrite_manifest(path: str, man_rows: list[dict]) -> None:
-    """Full manifest REWRITE (block compaction only): replaces every
-    segment with one merged segment describing the post-rewrite table."""
+def next_commit(path: str, seg_name: str | None = None) -> tuple[int, int]:
+    """(snapshot, part_offset) the next commit publishes under: committed
+    max + 1 for both.  A replayed commit whose deterministic ``seg_name``
+    already exists REUSES the pair recorded in it instead (see
+    :func:`segment_commit_info` for why).  Call under the commit lease."""
+    if seg_name is not None:
+        off, snap = segment_commit_info(path, seg_name)
+        if snap is not None:
+            return snap, off
+    snap, max_part = committed_state(path)
+    return snap + 1, max_part + 1
+
+
+def commit(path: str, lease: CommitLease, files: list[str], snapshot: int,
+           *, part_offset: int, seg_name: str | None = None,
+           lineage: dict[int, int] | None = None) -> list[dict]:
+    """THE publish sequence — every writer commits through here, under its
+    held ``lease``, after its dictionary rows and block ``files``
+    (basenames under ``blocks/``) are on disk; returns the published rows.
+    Steps in the module docstring's order.  The cost is O(files of this
+    commit) plus O(segments) footer reads: committed rows are never read.
+
+    A deterministic ``seg_name`` (``seg-<tag>.parquet``, replayable stream
+    commits whose block files are ``<tag>-<i>.parquet``) drops the
+    ``<tag>-*`` files a crashed attempt left beyond ``files`` — the
+    DataSource reader decodes every file on disk.  Files with no block
+    rows are removed unless the table would have no block file left.
+    ``lineage`` (compaction) swaps the WHOLE manifest: one segment over
+    ``files`` supersedes every other, and mapped parts keep the snapshot
+    that committed them.  A commit with no rows publishes nothing unless
+    it swaps."""
+    bd = os.path.join(path, "blocks")
+    if seg_name is not None:
+        tag = seg_name[len("seg-"):-len(".parquet")] + "-"
+        keep = set(files)
+        for f in os.listdir(bd) if os.path.isdir(bd) else []:
+            if f.startswith(tag) and f.endswith(".parquet") and f not in keep:
+                os.remove(os.path.join(bd, f))
+    rows = manifest_rows_for_new_files(bd, files, snapshot)
+    empty = set(files) - {r["file"] for r in rows}
+    if empty and (rows or has_commits(path)):
+        # Spark's empty-output file: garbage once the table has block
+        # files with rows (an all-empty table keeps it for its schema)
+        for f in empty:
+            os.remove(os.path.join(bd, f))
+    for r in rows:
+        r["part_offset"] = int(part_offset)
+        if lineage is not None:
+            r["snapshot"] = lineage.get(r["part_id"], int(snapshot))
+    if not rows and lineage is None:
+        return rows
+    lease.assert_owned()
+    if lineage is not None:
+        d = man_dir(path)
+        seg = write_segment(path, rows,
+                            f"seg-rewrite-{uuid.uuid4().hex[:8]}.parquet",
+                            merge_limit=10**9)
+        # everything the new segment supersedes (including any migration
+        # segment write_segment just produced)
+        for f in _segment_files(d) + _legacy_files(d):
+            if f != seg:
+                os.remove(os.path.join(d, f))
+    else:
+        write_segment(path, rows, seg_name, expect_new_snapshot=snapshot)
+    lease.assert_owned()
+    write_cursor(path, max((r["snapshot"] for r in rows), default=snapshot),
+                 max((r["part_id"] for r in rows), default=-1))
+    return rows
+
+
+def clear_manifest(path: str, lease: CommitLease) -> None:
+    """Empty the manifest (all but the lease files, so the holder keeps its
+    heartbeat) ahead of an OVERWRITE, before it replaces ``dictionaries/``
+    or ``blocks/``: a crash past this point leaves a table with no commits,
+    never the old manifest naming replaced files.  ``manifest.old`` goes
+    first — an emptied ``manifest/`` would expose it."""
+    import shutil
+
+    lease.assert_owned()
     d = man_dir(path)
-    os.makedirs(d, exist_ok=True)
-    seg = write_segment(path, man_rows, f"seg-rewrite-{uuid.uuid4().hex[:8]}.parquet",
-                        merge_limit=10**9)
-    # delete everything the new segment supersedes (including any
-    # migration segment write_segment just produced)
-    for f in _segment_files(d) + _legacy_files(d):
-        if f != seg:
+    shutil.rmtree(d + ".old", ignore_errors=True)
+    for f in os.listdir(d) if os.path.isdir(d) else []:
+        if not f.startswith(CommitLease.FILE):
             os.remove(os.path.join(d, f))
-    snap = max((int(r.get("snapshot") or 0) for r in man_rows), default=0)
-    maxp = max((int(r["part_id"]) for r in man_rows), default=-1)
-    write_cursor(path, snap, maxp)
 
 
 def committed_state(path: str) -> tuple[int, int]:
@@ -636,34 +736,35 @@ def committed_state(path: str) -> tuple[int, int]:
             int(pc.max(t.column("part_id")).as_py()))
 
 
-def manifest_rows_for_new_files(spark, blocks_dir: str, new_files: list[str],
+def manifest_rows_for_new_files(blocks_dir: str, new_files: list[str],
                                 snapshot: int) -> list[dict]:
     """Manifest rows (with physical file mapping + commit-time row-group
-    counts + snapshot) for freshly-written block parquet files — the ONE
-    implementation of the O(batch) commit stamping shared by
-    write_encoded, the foreachBatch StreamingEncoder, and compaction
-    (three divergent copies of this block caused a replay bug once).
+    counts + snapshot) for freshly-written block parquet files — the
+    stamping step of :func:`commit`.
 
-    Driver-side pyarrow reads (round 6): the stamped batch is a bounded
-    list of freshly-written files (O(tasks), never O(table)) holding a
-    handful of block METADATA rows each — a Spark job here cost ~0.4 s of
-    pure scheduling per commit.  The footer reads stay threaded
-    (:func:`row_group_counts`); ``spark`` is kept in the signature for the
-    three call sites."""
-    import json as _json
+    Driver-side pyarrow reads: the stamped batch is a bounded list of
+    freshly-written files (O(tasks), except compaction's all-files
+    restamp) holding a handful of block METADATA rows each.  Each file is
+    opened once for both its row-group count and its metadata columns,
+    and the per-file reads are threaded like :func:`row_group_counts`."""
+    from concurrent.futures import ThreadPoolExecutor
 
     import pyarrow.parquet as pq
 
+    def one(fname: str) -> tuple[str, int, list[dict]]:
+        pf = pq.ParquetFile(os.path.join(blocks_dir, fname))
+        t = pf.read(columns=["part_id", "n_rows", "raw_bytes", "enc_bytes",
+                             "columns"])
+        return fname, pf.metadata.num_row_groups, t.to_pylist()
+
     if not new_files:
         return []
-    rg = row_group_counts([os.path.join(blocks_dir, f) for f in new_files])
+    with ThreadPoolExecutor(min(16, len(new_files))) as ex:
+        per_file = list(ex.map(one, new_files))
     rows: list[dict] = []
-    for fname in new_files:
-        t = pq.read_table(
-            os.path.join(blocks_dir, fname),
-            columns=["part_id", "n_rows", "raw_bytes", "enc_bytes", "columns"])
+    for fname, n_rg, recs in per_file:
         per_part: dict[int, dict] = {}
-        for rec in t.to_pylist():
+        for rec in recs:
             d = per_part.setdefault(int(rec["part_id"]), {
                 "n_blocks": 0, "n_rows": 0, "raw_bytes": 0, "enc_bytes": 0,
                 "codecs": set()})
@@ -683,11 +784,11 @@ def manifest_rows_for_new_files(spark, blocks_dir: str, new_files: list[str],
                 "enc_bytes": d["enc_bytes"],
                 # distinct (column, codec) pairs, sorted — a column may
                 # legitimately use different codecs in different blocks
-                "codec_summary": _json.dumps(
+                "codec_summary": json.dumps(
                     [{"col": a, "codec": b} for a, b in sorted(d["codecs"])],
                     separators=(",", ":")),
                 "status": "committed",
-                "file_row_groups": rg.get(fname),
+                "file_row_groups": n_rg,
                 "snapshot": int(snapshot),
             })
     return rows
@@ -775,11 +876,7 @@ class CommitLease:
         return os.path.join(man_dir(self.path), self.FILE)
 
     def _read(self) -> dict | None:
-        try:
-            with open(self._file) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return None
+        return _read_json(self._file)
 
     def _payload(self) -> dict:
         import time
@@ -802,8 +899,10 @@ class CommitLease:
         replace would clobber, yielding two live committers.  The uniform
         claim path leaves the lease path empty for the microseconds
         between rename and link; a contender that O_EXCLs inside that
-        window wins and this holder fails loudly before publishing —
-        single-committer safety is preserved in every interleaving."""
+        window would win, so :func:`acquire_commit_lease` backs off while
+        a live ``.renew-`` claim exists; if it still wins, this holder
+        fails loudly before publishing — single-committer safety is
+        preserved in every interleaving."""
         with self._lock:
             if self._lost:
                 raise CommitLeaseError(
@@ -824,11 +923,7 @@ class CommitLease:
                 raise CommitLeaseError(
                     f"commit lease for {self.path} lost: expired and "
                     "removed by a takeover mid-renew")
-            try:
-                with open(claim) as f:
-                    moved = json.load(f)
-            except (OSError, ValueError):
-                moved = None
+            moved = _read_json(claim)
             if moved is None or moved.get("owner") != self.owner:
                 # we displaced someone else's fresh lease: put it back
                 try:
@@ -890,24 +985,6 @@ class CommitLease:
             hb.join(timeout=5)
             self._hb = None
 
-    def recreate(self) -> None:
-        """Re-materialize the lease file after an OVERWRITE commit cleared
-        the manifest dir (taking the lease file with it).  Only valid for
-        the holder that performed the clear — anyone else acquiring in the
-        clear-to-recreate window loses to the O_EXCL-free rewrite here,
-        which is acceptable exactly because overwrite is already
-        destructive to every concurrent writer by definition.  Callers
-        must stop the heartbeat before clearing the dir and restart it
-        after this call (a renew against the momentarily-missing file
-        would mark the lease lost)."""
-        with self._lock:
-            os.makedirs(man_dir(self.path), exist_ok=True)
-            tmp = self._file + f".{uuid.uuid4().hex[:8]}.tmp"
-            with open(tmp, "w") as f:
-                json.dump(self._payload(), f)
-            os.replace(tmp, self._file)
-            self._lost = False
-
     def release(self) -> None:
         """Remove the lease iff still owned.  Like :meth:`renew`, the
         remove ALWAYS goes through a claim-and-verify rename — a
@@ -924,11 +1001,7 @@ class CommitLease:
                 os.rename(self._file, claim)
             except FileNotFoundError:
                 return  # takeover already cleared it
-            try:
-                with open(claim) as f:
-                    moved = json.load(f)
-            except (OSError, ValueError):
-                moved = None
+            moved = _read_json(claim)
             if moved is not None and moved.get("owner") != self.owner:
                 # displaced a thief's fresh lease: restore no-clobber
                 try:
@@ -967,8 +1040,7 @@ def acquire_commit_lease(path: str, lease_s: float = 120.0,
         except FileExistsError:
             cur = lease._read()
             if cur is not None:
-                expired = time.time() > float(cur.get("renewed", 0)) + float(
-                    cur.get("lease_s", lease_s))
+                expired = _lease_expired(cur, lease_s)
             else:
                 try:
                     # unparseable lease (writer died between O_EXCL create
@@ -991,15 +1063,10 @@ def acquire_commit_lease(path: str, lease_s: float = 120.0,
                     os.rename(lease._file, stale)
                 except FileNotFoundError:
                     continue  # another contender won the rename
-                try:
-                    with open(stale) as f:
-                        moved = json.load(f)
-                except (OSError, ValueError):
-                    moved = None
+                moved = _read_json(stale)
                 now = time.time()
                 if moved is not None:
-                    moved_expired = now > float(moved.get("renewed", 0)) + \
-                        float(moved.get("lease_s", lease_s))
+                    moved_expired = _lease_expired(moved, lease_s)
                 else:
                     # unparseable: stale only once its mtime has aged past
                     # the lease (a fresh O_EXCL file whose payload is
@@ -1027,7 +1094,26 @@ def acquire_commit_lease(path: str, lease_s: float = 120.0,
             continue
         with os.fdopen(fd, "w") as f:
             json.dump(lease._payload(), f)
-        return lease
+        if not _live_renew_claim(d, lease_s):
+            return lease
+        # the path was empty only because a LIVE holder is mid-renew (its
+        # lease renamed to a claim for microseconds): hand the path back.
+        # Its link either lands after this remove, or already failed on
+        # our file and it has given the lease up — never two holders.
+        os.remove(lease._file)
+        if time.monotonic() > deadline:
+            raise TimeoutError(f"commit lease for {path} held past {timeout_s}s")
+        time.sleep(poll_s)
+
+
+def _live_renew_claim(d: str, lease_s: float) -> bool:
+    """True iff ``d`` holds an unexpired ``.renew-`` claim — a holder
+    between the rename and the restore of :meth:`CommitLease.renew`.  A
+    crashed holder's claim stops counting once its lease expires."""
+    claims = [_read_json(os.path.join(d, f)) for f in os.listdir(d)
+              if f.startswith(CommitLease.FILE + ".renew-")]
+    return any(c is not None and not _lease_expired(c, lease_s)
+               for c in claims)
 
 
 def row_group_counts(paths: list[str], max_workers: int = 16) -> dict[str, int]:

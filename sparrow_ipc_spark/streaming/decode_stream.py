@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from sparrow_ipc_spark.operators.decode_job import decode_blocks
+from sparrow_ipc_spark.operators.encode_job import load_dict_rows
 from sparrow_ipc_spark.schema import BLOCK_SCHEMA, TRANSCRIPTS_SCHEMA
 
 
@@ -24,6 +25,6 @@ def decode_stream(
     columns: list[str] | None = None,
 ) -> DataFrame:
     """Streaming DataFrame of decoded rows from a (growing) block table."""
-    dict_rows = [r.asDict() for r in spark.read.parquet(f"{out_dir}/dictionaries").collect()]
+    dict_rows = load_dict_rows(out_dir)
     stream = spark.readStream.schema(BLOCK_SCHEMA).parquet(f"{out_dir}/blocks")
     return decode_blocks(spark, stream, dict_rows, schema=schema, columns=columns)

@@ -17,15 +17,19 @@ order, and never re-emitted.
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from sparrow_ipc_spark.operators.encode_job import (
     DEFAULT_DICT_COLS,
     DICT_MAX_GLOBAL_DISTINCT,
+    gated_distinct,
     dict_id_for,
     dict_row_for_values,
     encode_transcripts,
+    load_dict_rows,
+    payload_from_dict_rows,
 )
 
 
@@ -53,54 +57,31 @@ class StreamingEncoder:
         # version-0 rows for the same dict_id and assign codes that collide
         # with the committed assignment — decode merges rows by version, so
         # post-restart blocks would silently decode to WRONG values.
-        import os
-
-        if os.path.isdir(f"{out_dir}/dictionaries"):
-            import pyarrow.parquet as pq
-
-            from sparrow_ipc_spark.operators.encode_job import payload_from_dict_rows
-
-            rows = pq.read_table(f"{out_dir}/dictionaries").to_pylist()
-            if rows:
-                committed = payload_from_dict_rows(rows)
-                for c, entry in committed.items():
-                    if c in self._values:
-                        self._values[c] = list(entry["values"])
-                        self._known[c] = set(entry["values"])
-                self._version = max(int(r.get("version", 0) or 0) for r in rows) + 1
+        rows = load_dict_rows(out_dir)
+        if rows:
+            for c, entry in payload_from_dict_rows(rows).items():
+                if c in self._values:
+                    self._values[c] = list(entry["values"])
+                    self._known[c] = set(entry["values"])
+            self._version = max(int(r.get("version", 0) or 0) for r in rows) + 1
 
     def _update_dictionaries(self, df: DataFrame) -> list[dict]:
         """Emit-once protocol: detect new values, emit one delta row per
         column with additions; codes extend the existing assignment.
 
-        Cardinality-gated like the batch path (encode_job.py
-        ``build_global_dicts``): a cheap ``approx_count_distinct`` runs
-        before any ``collect_set``, so a mis-listed high-cardinality column
-        demotes to block-local dictionaries instead of pulling an unbounded
-        distinct set into the driver every micro-batch — the 10^12-row
-        driver-OOM shape."""
+        Cardinality-gated like the batch path (``encode_job.gated_distinct``
+        on the BATCH's sketch, which bounds the collect_set the driver is
+        about to pull): a mis-listed high-cardinality column demotes to
+        block-local dictionaries instead of pulling an unbounded distinct
+        set into the driver every micro-batch.  Union growth past the
+        ceiling is caught exactly after the collect; counting known values
+        in the gate would demote stable vocabularies that merely
+        re-observe themselves."""
         cols = [c for c in self.dict_cols if c not in self._demoted]
         if not cols:
             return []
-        approx = df.agg(
-            *[F.approx_count_distinct(F.col(c)).alias(c) for c in cols]
-        ).collect()[0]
-        eligible = []
-        for c in cols:
-            # gate the BATCH's sketch only (same 2× headroom as the batch
-            # path, encode_job.build_global_dicts: approx ≤ 2·ceiling
-            # absorbs HLL sketch error): it bounds the collect_set the
-            # driver is about to pull; union growth past the ceiling is
-            # caught exactly after the collect below.  Counting known
-            # values here would demote stable vocabularies that merely
-            # re-observe themselves.
-            if int(approx[c] or 0) > 2 * DICT_MAX_GLOBAL_DISTINCT:
-                self._demoted.add(c)
-            else:
-                eligible.append(c)
-        if not eligible:
-            return []
-        agg = df.agg(*[F.collect_set(F.col(c)).alias(c) for c in eligible]).collect()[0]
+        eligible, agg = gated_distinct(df, cols, DICT_MAX_GLOBAL_DISTINCT)
+        self._demoted.update(c for c in cols if c not in eligible)
         rows = []
         for c in eligible:
             fresh = sorted(v for v in agg[c] if v is not None and v not in self._known[c])
@@ -147,70 +128,41 @@ class StreamingEncoder:
 
     def _process_batch_under_lease(self, df: DataFrame, batch_id: int,
                                    lease) -> None:
+        from sparrow_ipc_spark.sources import manifest as M
+
         dict_rows = self._update_dictionaries(df)
         if dict_rows:
             # dictionaries land before the blocks that reference them
-            # (driver-side write: dictionary rows are a bounded list and a
-            # Spark job here cost ~0.4 s of scheduling per micro-batch)
             from sparrow_ipc_spark.operators.encode_job import write_dict_rows
 
             write_dict_rows(self.out_dir, dict_rows, append=True)
-        from sparrow_ipc_spark.sources import manifest as M
-
         # part ids are offset past the committed table so micro-batches
         # never collide — without this, snapshot time travel over a
-        # streamed dir would resolve a part id to EVERY batch's rows.
-        # REPLAY STABILITY: a foreachBatch replay (crash after this
-        # batch's commit but before the checkpoint recorded it) must reuse
-        # the crashed attempt's part offset AND snapshot — both read back
-        # from its own deterministic segment.  With the same part ids the
-        # re-encode is byte-identical and decode_dir's
-        # (part_id, batch_seq, crc) dedupe collapses the leftover files;
-        # a fresh offset would decode every row of the batch twice.
-        seg_name = f"seg-fb-{batch_id:08d}.parquet"
-        prev_snap, prev_max = M.committed_state(self.out_dir)
-        replay_off, replay_snap = M.segment_commit_info(self.out_dir, seg_name)
-        part_offset = replay_off if replay_off is not None else prev_max + 1
-        snap = replay_snap if replay_snap is not None else prev_snap + 1
+        # streamed dir would resolve a part id to EVERY batch's rows.  A
+        # foreachBatch replay (crash after this batch's commit but before
+        # the checkpoint recorded it) reuses the crashed attempt's offset
+        # and snapshot from its deterministic segment, so the re-encode is
+        # byte-identical.
+        tag = f"fb-{batch_id:08d}"
+        snap, part_offset = M.next_commit(self.out_dir, f"seg-{tag}.parquet")
         blocks_df, _, _ = encode_transcripts(
             self.spark, df, n_parts=self.n_parts, dict_cols=self.dict_cols,
             dict_payload=self.payload(), part_offset=part_offset,
         )
+        # staged, then published under deterministic batch-scoped names
+        # (the DataSource stream writer's scheme): a replay overwrites the
+        # crashed attempt's files, and the commit drops any extra ones
+        staging = f"{self.out_dir}/_staging_{tag}"
+        blocks_df.write.mode("overwrite").option("compression", "snappy").parquet(staging)  # bodies pre-zstd'd
         bd = f"{self.out_dir}/blocks"
-        pre = set(os.listdir(bd)) if os.path.isdir(bd) else set()
-        blocks_df.write.mode("append").option("compression", "snappy").parquet(bd)  # bodies pre-zstd'd
-        # O(batch) manifest-segment commit, same plane as write_encoded:
-        # streamed dirs get footer-free DS planning, O(1) cursor offsets
-        # and snapshot lineage.
-        new_files = sorted(f for f in os.listdir(bd)
-                           if f.endswith(".parquet") and f not in pre)
-        if not new_files:
-            return
-        man_rows = M.manifest_rows_for_new_files(self.spark, bd, new_files, snap)
-        for r in man_rows:
-            # the replay-stable offset must be recorded EXPLICITLY:
-            # min(part_id) under-reports it when the lowest hash partition
-            # of this batch encoded zero rows
-            r["part_offset"] = part_offset
-        lease.assert_owned()  # a stolen lease must abort before publishing
-        # directory-level CAS; auto-skipped on replay (segment exists)
-        M.write_segment(self.out_dir, man_rows, seg_name,
-                        expect_new_snapshot=snap)
-        new_max = max((int(r["part_id"]) for r in man_rows), default=prev_max)
-        lease.assert_owned()  # merge inside write_segment can run long
-        M.write_cursor(self.out_dir, max(prev_snap, snap), max(prev_max, new_max))
-        if replay_off is not None:
-            # REPLAY VACUUM: the crashed attempt's uuid-named block files
-            # are now unmanifested (this replay's segment overwrote the
-            # crashed segment with the fresh file names Spark minted).
-            # decode_dir collapses them via its (part_id, batch_seq, crc)
-            # dedupe, but the batch DataSource reader decodes every file on
-            # disk — left in place they'd permanently double the batch's
-            # rows there AND fail the manifest-vs-disk planning check.
-            # Shared guarded vacuum (manifest.vacuum_orphan_blocks): only
-            # deletes when every committed row maps a file and the
-            # committed map is consistent with disk.
-            M.vacuum_orphan_blocks(self.out_dir)
+        os.makedirs(bd, exist_ok=True)
+        staged = sorted(f for f in os.listdir(staging) if f.endswith(".parquet"))
+        names = [f"{tag}-{i:05d}.parquet" for i in range(len(staged))]
+        for f, name in zip(staged, names):
+            os.replace(os.path.join(staging, f), os.path.join(bd, name))
+        shutil.rmtree(staging, ignore_errors=True)
+        M.commit(self.out_dir, lease, names, snap,
+                 part_offset=part_offset, seg_name=f"seg-{tag}.parquet")
 
 
 def encode_stream(spark: SparkSession, stream_df: DataFrame, out_dir: str,

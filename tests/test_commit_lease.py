@@ -17,6 +17,7 @@ import time
 
 import pytest
 
+from sparrow_ipc_spark.operators import encode_job as E
 from sparrow_ipc_spark.sources import manifest as M
 
 
@@ -56,6 +57,24 @@ def test_live_lease_blocks_second_acquirer(tmp_path):
     a.release()
     b = M.acquire_commit_lease(out, timeout_s=1)  # released → instant
     b.release()
+
+
+def test_acquirer_backs_off_from_a_lease_mid_renew(tmp_path):
+    """A renew renames the live lease to a ``.renew-`` claim for a moment,
+    leaving the path empty: a waiter whose O_EXCL lands in that window
+    must hand the path back, not take the live lease (and fail the
+    holder's commit)."""
+    out = str(tmp_path / "tbl")
+    a = M.acquire_commit_lease(out, lease_s=60)
+    claim = a._file + ".renew-test"
+    os.rename(a._file, claim)  # frozen mid-renew
+    with pytest.raises(TimeoutError):
+        M.acquire_commit_lease(out, lease_s=60, timeout_s=0.3, poll_s=0.05)
+    os.link(claim, a._file)  # the renew restores its lease
+    os.remove(claim)
+    a.assert_owned()
+    a.release()
+    M.acquire_commit_lease(out, timeout_s=1).release()
 
 
 def test_expired_lease_taken_over_and_loser_fails_loudly(tmp_path):
@@ -366,3 +385,163 @@ def test_release_after_stall_preserves_foreign_lease(tmp_path):
     a.release()
     cur = json.load(open(a._file))
     assert cur["owner"] == "B-owner"
+
+
+# -- crash matrix over manifest.commit -------------------------------------
+#
+# Every writer publishes through manifest.commit, which calls
+# write_segment and then write_cursor through the module.  A fault raised
+# before the segment publishes, or between segment and cursor, must leave
+# a table that both readers decode as either the pre-commit or the
+# post-commit table; the writer's retry (or foreachBatch replay) must then
+# yield exactly the post-commit table.
+
+def _fp(df) -> dict:
+    from sparrow_ipc_spark.operators.verify import _fingerprint_pass
+
+    return _fingerprint_pass(df, keyed=True)
+
+
+def _readers_fp(spark, out) -> list[dict]:
+    from sparrow_ipc_spark.operators.decode_job import decode_dir
+    from sparrow_ipc_spark.sources.datasource import read_encoded
+
+    return [_fp(decode_dir(spark, out)), _fp(read_encoded(spark, out))]
+
+
+class _Injected(RuntimeError):
+    pass
+
+
+def _crash_append(spark, out, base, inc):
+    from sparrow_ipc_spark.operators.encode_job import write_encoded
+
+    write_encoded(spark, base, out, n_parts=2)
+    snap = M.committed_state(out)[0]
+
+    def run():
+        write_encoded(spark, inc, out, n_parts=2, append=True)
+
+    def retry():
+        # the caller cannot tell whether the raising append landed: it
+        # re-runs it iff the committed snapshot did not advance
+        if M.committed_state(out)[0] == snap:
+            run()
+
+    return run, retry, base.unionByName(inc)
+
+
+def _crash_stream(spark, out, base, inc):
+    from sparrow_ipc_spark.streaming.encode_stream import StreamingEncoder
+
+    StreamingEncoder(spark, out, n_parts=2).process_batch(base, 0)
+
+    def run():
+        StreamingEncoder(spark, out, n_parts=2).process_batch(inc, 1)
+
+    # foreachBatch replays the batch whose commit raised (after a restart)
+    return run, run, base.unionByName(inc)
+
+
+def _crash_compact(spark, out, base, inc):
+    from sparrow_ipc_spark.operators.compact import compact_blocks
+    from sparrow_ipc_spark.operators.encode_job import write_encoded
+
+    write_encoded(spark, base, out, n_parts=2)
+    write_encoded(spark, inc, out, n_parts=2, append=True)
+
+    def run():
+        compact_blocks(spark, out, small_rows=10_000)
+
+    return run, run, base.unionByName(inc)
+
+
+@pytest.mark.parametrize("fault", ["write_segment", "write_cursor"])
+@pytest.mark.parametrize("writer", ["append", "stream", "compact"])
+def test_commit_crash_matrix(spark, tmp_path, monkeypatch, writer, fault):
+    from sparrow_ipc_spark.sources.transcripts import transcripts_df
+
+    out = str(tmp_path / "tbl")
+    base = transcripts_df(spark, n_convs=12, seed=1).cache()
+    inc = transcripts_df(spark, n_convs=8, seed=2).cache()
+    setup = {"append": _crash_append, "stream": _crash_stream,
+             "compact": _crash_compact}[writer]
+    run, retry, post_df = setup(spark, out, base, inc)
+    pre, post = _readers_fp(spark, out)[0], _fp(post_df)
+
+    def boom(*a, **k):
+        raise _Injected(fault)
+
+    with monkeypatch.context() as m:
+        m.setattr(M, fault, boom)
+        with pytest.raises(_Injected):
+            run()
+    for got in _readers_fp(spark, out):
+        assert got in (pre, post), (writer, fault, got, pre, post)
+    retry()
+    assert _readers_fp(spark, out) == [post, post], (writer, fault)
+    assert not os.path.exists(os.path.join(out, "manifest", M.CommitLease.FILE))
+
+
+@pytest.mark.parametrize("fault", [(E, "write_dict_rows"), (M, "write_segment"),
+                                   (M, "write_cursor")],
+                         ids=["write_dict_rows", "write_segment", "write_cursor"])
+def test_overwrite_crash_then_resume(spark, tmp_path, monkeypatch, fault):
+    """An overwrite that crashes anywhere past its start must not leave the
+    old table's manifest behind: a resume then writes exactly the new
+    table, with a manifest naming exactly the block files on disk."""
+    from sparrow_ipc_spark.sources.transcripts import transcripts_df
+
+    out = str(tmp_path / "tbl")
+    old = transcripts_df(spark, n_convs=12, seed=1).cache()
+    new = transcripts_df(spark, n_convs=8, seed=2).cache()
+    E.write_encoded(spark, old, out, n_parts=2)
+    mod, attr = fault
+
+    def boom(*a, **k):
+        raise _Injected(attr)
+
+    with monkeypatch.context() as m:
+        m.setattr(mod, attr, boom)
+        with pytest.raises(_Injected):
+            E.write_encoded(spark, new, out, n_parts=3)
+    E.write_encoded(spark, new, out, n_parts=3, resume=True)
+    rows = M.read_manifest_rows(out)
+    disk = {f for f in os.listdir(os.path.join(out, "blocks"))
+            if f.endswith(".parquet")}
+    assert {r["file"] for r in rows} == disk
+    assert sum(int(r["n_rows"]) for r in rows) == new.count()
+    assert _readers_fp(spark, out) == [_fp(new), _fp(new)]
+
+
+@pytest.mark.parametrize("fault", ["write_segment", "write_cursor"])
+def test_stream_replay_with_fewer_files_drops_extras(spark, tmp_path,
+                                                     monkeypatch, fault):
+    """A replayed micro-batch that publishes FEWER block files than its
+    crashed attempt (here: restarted with fewer partitions) must not leave
+    the attempt's extra ``fb-<id>-*`` files behind — the DataSource reader
+    decodes every file on disk and would double their rows."""
+    from sparrow_ipc_spark.sources.transcripts import transcripts_df
+    from sparrow_ipc_spark.streaming.encode_stream import StreamingEncoder
+
+    out = str(tmp_path / "tbl")
+    base = transcripts_df(spark, n_convs=12, seed=1).cache()
+    inc = transcripts_df(spark, n_convs=24, seed=2).cache()
+    StreamingEncoder(spark, out, n_parts=2).process_batch(base, 0)
+
+    def boom(*a, **k):
+        raise _Injected(fault)
+
+    with monkeypatch.context() as m:
+        m.setattr(M, fault, boom)
+        with pytest.raises(_Injected):
+            StreamingEncoder(spark, out, n_parts=4).process_batch(inc, 1)
+    crashed = {f for f in os.listdir(os.path.join(out, "blocks"))
+               if f.startswith("fb-00000001-")}
+    StreamingEncoder(spark, out, n_parts=2).process_batch(inc, 1)
+    disk = {f for f in os.listdir(os.path.join(out, "blocks"))
+            if f.endswith(".parquet")}
+    assert len(crashed) > len({f for f in disk if f.startswith("fb-00000001-")})
+    assert {r["file"] for r in M.read_manifest_rows(out)} == disk
+    post = _fp(base.unionByName(inc))
+    assert _readers_fp(spark, out) == [post, post]

@@ -42,3 +42,30 @@ def test_compact_merges_small_blocks(spark, tmp_path_factory):
     # idempotent: nothing small remains at this threshold (single big block)
     again = compact_blocks(spark, out, small_rows=2, target_rows=65_536)
     assert again["compacted"] == 0
+
+
+def test_compact_raises_on_broken_manifest(spark, tmp_path):
+    """A truncated manifest segment must fail compaction loudly, before
+    anything is staged or swapped — never collapse the table's snapshot
+    lineage into the rewrite's."""
+    import os
+
+    import pytest
+
+    from sparrow_ipc_spark.operators.encode_job import write_encoded
+
+    out = str(tmp_path / "tbl")
+    write_encoded(spark, transcripts_df(spark, n_convs=20, seed=1), out, n_parts=2)
+    write_encoded(spark, transcripts_df(spark, n_convs=20, seed=2), out,
+                  n_parts=2, append=True)
+    man = os.path.join(out, "manifest")
+    seg = os.path.join(man, sorted(f for f in os.listdir(man)
+                                   if f.startswith("seg-"))[0])
+    with open(seg, "r+b") as f:
+        f.truncate(os.path.getsize(seg) // 2)
+    blocks_before = sorted(os.listdir(os.path.join(out, "blocks")))
+    man_before = sorted(os.listdir(man))
+    with pytest.raises((OSError, ValueError)):
+        compact_blocks(spark, out, small_rows=10_000)
+    assert sorted(os.listdir(os.path.join(out, "blocks"))) == blocks_before
+    assert sorted(os.listdir(man)) == man_before

@@ -280,3 +280,23 @@ def test_datasource_ts_range_filter(spark, enc_dir):
     got = spark.read.format("sparrow_ipc").load(out).where(f"ts >= TIMESTAMP '{lit}'")
     want = df.where(f"ts >= TIMESTAMP '{lit}'")
     assert got.count() == want.count() > 0
+
+
+def test_ds_write_then_streaming_encoder_decodes(spark, tmp_path):
+    """Mixed writers on one table: the DataSource writer seeds
+    ``dictionaries/`` with the same schema the streaming encoder's delta
+    rows use, so both readers see every row of both writes."""
+    from sparrow_ipc_spark.operators.decode_job import decode_dir
+    from sparrow_ipc_spark.sources.datasource import read_encoded
+    from sparrow_ipc_spark.sources.transcripts import transcripts_df
+    from sparrow_ipc_spark.streaming.encode_stream import StreamingEncoder
+
+    out = str(tmp_path / "mixed")
+    spark.dataSource.register(SparrowIPCDataSource)
+    a = transcripts_df(spark, n_convs=50, seed=1).cache()
+    b = transcripts_df(spark, n_convs=50, seed=2).cache()
+    a.write.format("sparrow_ipc").mode("append").save(out)
+    StreamingEncoder(spark, out, n_parts=2).process_batch(b, 0)
+    total = a.count() + b.count()
+    assert decode_dir(spark, out).count() == total
+    assert read_encoded(spark, out).count() == total

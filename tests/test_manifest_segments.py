@@ -407,7 +407,7 @@ def test_planning_cache_rereads_nothing_on_unchanged_manifest(ds_dir, monkeypatc
     monkeypatch.setattr(pq, "read_metadata", boom)
     monkeypatch.setattr(pq, "ParquetFile", boom)
     # dictionary load is reader-init work, not planning — stub it out
-    monkeypatch.setattr(D, "_load_dict_rows", lambda p: [])
+    monkeypatch.setattr(D, "load_dict_rows", lambda p: [])
     r2 = SparrowIPCReader({"path": ds_dir}, fields)
     assert [(p.file, p.rg_start, p.rg_end) for p in r2.partitions()] == \
         [(p.file, p.rg_start, p.rg_end) for p in parts_warm]

@@ -211,8 +211,8 @@ def test_streaming_encoder_commits_manifest_segments(spark, tmp_path_factory):
 def test_streaming_batch_replay_is_idempotent(spark, tmp_path_factory):
     """foreachBatch replay (crash after commit, before the checkpoint
     records the batch): re-running process_batch with the same batch_id
-    must reuse the crashed attempt's part offset and snapshot, so decode
-    collapses the leftover byte-identical files and no row duplicates."""
+    must reuse the crashed attempt's part offset and snapshot, so the
+    re-encode overwrites the same files and no row duplicates."""
     import os
 
     from sparrow_ipc_spark.sources import manifest as M
@@ -233,9 +233,9 @@ def test_streaming_batch_replay_is_idempotent(spark, tmp_path_factory):
     assert dec.count() == df.count()  # replay never duplicates rows
     rep = roundtrip_report(df, dec)
     assert rep["all_columns_identical"] and rep["text_mismatches"] == 0
-    # replay VACUUM: the crashed attempt's uuid-named block files must be
-    # gone — blocks/ holds exactly the manifested set, so readers without
-    # the (part_id, batch_seq, crc) dedupe (the batch DataSource) see each
+    # the replay overwrites the first attempt's deterministic block files,
+    # so blocks/ holds exactly the manifested set: readers without the
+    # (part_id, batch_seq, crc) dedupe (the batch DataSource) see each
     # row once and the manifest-vs-disk planning fast path stays intact
     disk = {f for f in os.listdir(f"{out}/blocks") if f.endswith(".parquet")}
     manifested = {r["file"] for r in M.read_manifest_rows(out)}
