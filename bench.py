@@ -223,9 +223,12 @@ def _prior_query_walls() -> dict[str, float]:
 
 
 def _warm_datasource(spark) -> None:
-    """One tiny sparrow_ipc DataSource write+read: pays the one-time Python
-    DataSource worker/plan spin-up (~5 s) OUTSIDE any timed region — the
-    same treatment timed_encode gives the JVM and mapInPandas workers."""
+    """One tiny sparrow_ipc DataSource write+read OUTSIDE any timed region:
+    pays the first Python DataSource worker spawn and imports (~5 s), the
+    same treatment timed_encode gives the JVM and mapInPandas workers.
+    Warm-up does not remove the per-call cost: every planner call and read
+    task still pays a Python worker round trip (see
+    ``session._skip_unchanged_zip_rescans`` for the part the engine cuts)."""
     from sparrow_ipc_spark.sources.datasource import SparrowIPCDataSource, read_encoded
 
     try:

@@ -351,8 +351,7 @@ def fold_norm(vec) -> float:
 
 
 def semantic_dedup(df: DataFrame, centroids: np.ndarray, eps: float = 0.92,
-                   vec_col: str = "embedding", id_col: str = "vec_id",
-                   n_salts: int = 16) -> DataFrame:
+                   vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) re-expressed as
     DataFrame ops: cluster every embedding to its nearest centroid, then
     inside each cluster greedily keep the farthest-from-centroid item
@@ -398,8 +397,6 @@ def semantic_dedup(df: DataFrame, centroids: np.ndarray, eps: float = 0.92,
       (zip_with null-propagation) — the kernel pairs only same-length
       fully-non-null vectors and skips a NULL cluster key entirely (a
       NULL cluster never equi-joined before).
-    * ``n_salts`` is retained for API compatibility; the vectorized
-      kernel needs no salting (there is no join to skew).
     * Round-6: the assignment plan is generated SQL (the Column build of
       k×dim literal folds cost seconds of py4j), the centroid cosine is a
       lazy CASE over the winning position, the scan is spread past a

@@ -26,13 +26,7 @@ def _canon(col: str, dtype: str):
 
 def column_fingerprints(df: DataFrame) -> dict:
     """Order-insensitive per-column multiset fingerprints + row count."""
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for f in df.schema.fields:
-        # decimal(38,0) accumulator: overflow-free under ANSI mode at any scale
-        aggs.append(
-            F.sum(_canon(f.name, f.dataType.simpleString()).cast("decimal(38,0)")).alias(f"h_{f.name}")
-        )
-    return df.agg(*aggs).collect()[0].asDict()
+    return _fingerprint_pass(df, keyed=False)
 
 
 def _hashed_rows(df: DataFrame, keyed: bool) -> DataFrame:
@@ -104,15 +98,18 @@ def roundtrip_report(src: DataFrame, dec: DataFrame) -> dict:
         if fs["kt"] == fd["kt"] and fs["n_rows"] == fd["n_rows"]:
             text_mismatches = 0
         else:
-            hs = _hashed_rows(src, True)
-            hd = _hashed_rows(dec, True)
+            hs = _hashed_rows(src, True).select(
+                F.col("conv_id").alias("c_src"), F.col("turn_idx").alias("i_src"),
+                F.col("h_text").alias("t_src"))
+            hd = _hashed_rows(dec, True).select(
+                F.col("conv_id").alias("c_dec"), F.col("turn_idx").alias("i_dec"),
+                F.col("h_text").alias("t_dec"))
+            # null-safe keys: a NULL-keyed row meets its decoded twin, as
+            # it does in the fast path's keyed multiset sum
+            on = (F.col("c_src").eqNullSafe(F.col("c_dec"))
+                  & F.col("i_src").eqNullSafe(F.col("i_dec")))
             text_mismatches = (
-                hs.select("conv_id", "turn_idx", F.col("h_text").alias("t_src"))
-                .join(
-                    hd.select("conv_id", "turn_idx", F.col("h_text").alias("t_dec")),
-                    ["conv_id", "turn_idx"],
-                    "full_outer",
-                )
+                hs.join(hd, on, "full_outer")
                 .where(~F.col("t_src").eqNullSafe(F.col("t_dec")))
                 .count()
             )

@@ -148,3 +148,15 @@ def test_roundtrip_report_counts_mismatches_exactly(spark, small_df):
     assert rep2["rows_src"] - rep2["rows_dec"] == n_t1
     assert rep2["text_mismatches"] == n_t1
     assert not rep2["all_columns_identical"]
+
+
+def test_roundtrip_report_null_keys_match_on_the_slow_path(spark):
+    """A bit-identical NULL-keyed row is no mismatch, also when another
+    row's corruption sends the report down the slow-path join."""
+    schema = "conv_id string, turn_idx int, text string"
+    rows = [(None, 0, "same"), ("c1", 0, "a"), ("c1", 1, "b")]
+    src = spark.createDataFrame(rows, schema)
+    dec = spark.createDataFrame(rows[:2] + [("c1", 1, "corrupt")], schema)
+    rep = roundtrip_report(src, dec)
+    assert not rep["columns_ok"]["text"]
+    assert rep["text_mismatches"] == 1
